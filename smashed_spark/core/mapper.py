@@ -21,7 +21,9 @@ Scale notes
 * ``fingerprint`` hashes an explicit canonical-JSON config dict instead
   of the reference's pickled stack-frame harvest
   (reference base/mappers.py:179-238) — stable across interpreter
-  versions, usable as a cache key (see sources/cache.py).
+  versions, usable as a cache key (see sources/cache.py).  A DataFrame
+  in the config is keyed by its dataset fingerprint (core/fingerprint.py),
+  not by its repr, which is only its schema.
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ from abc import ABC, abstractmethod
 from typing import Any, Dict, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame
+
+from .fingerprint import dataset_fingerprint
 
 FieldSpec = Union[str, Sequence[str], None]
 
@@ -54,6 +58,8 @@ def _canonical(obj: Any) -> Any:
         return obj
     if isinstance(obj, type):
         return f"type:{obj.__name__}"
+    if isinstance(obj, DataFrame):  # repr is only the schema
+        return f"dataset:{dataset_fingerprint(obj)}"
     return repr(obj)
 
 

@@ -11,11 +11,11 @@ materializes every stage: base/interfaces.py:240-243).
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterable, List, Union
 
 from pyspark.sql import DataFrame
 
+from .fingerprint import segment_fingerprint
 from .mapper import SparkMapper
 
 
@@ -50,17 +50,7 @@ class Pipeline(SparkMapper):
 
     @property
     def fingerprint(self) -> str:
-        h = hashlib.sha1()
-        for m in self.mappers:
-            h.update(m.fingerprint.encode())
-        return h.hexdigest()
-
-    def prefix_fingerprint(self, upto: int) -> str:
-        """Fingerprint of the first ``upto`` stages (cache keying)."""
-        h = hashlib.sha1()
-        for m in self.mappers[:upto]:
-            h.update(m.fingerprint.encode())
-        return h.hexdigest()
+        return segment_fingerprint(self.mappers)
 
     # -- execution --------------------------------------------------------
 

@@ -1708,43 +1708,13 @@ def normalize_for_dedup(col: Column) -> Column:
     return F.trim(x)
 
 
-def _resolve_probe_mode(
-    batch: DataFrame,
-    broadcast_probe: "bool | str",
-    max_probe_rows: int,
-    rows_per_doc: int = 1,
-) -> bool:
-    """``"auto"`` -> probe mode iff the batch is small enough that its
-    broadcast key set stays bounded (``max_probe_rows`` keys, counting
-    ``rows_per_doc`` keys per batch row).  The decision reads at most
-    ``cap + 1`` batch rows — ``limit`` pushes into the batch's plan,
-    so the sizing job is O(cap) however large the batch, the same
-    bounded-probe idiom as SemanticDecontaminateMapper.  Row count
-    upper-bounds the DISTINCT key count, so the check never
-    under-estimates the broadcast.
-    """
-    if isinstance(broadcast_probe, str) and broadcast_probe != "auto":
-        # a typo'd "Auto"/"false"/"none" must not silently coerce
-        # truthy — that forces the unbounded broadcast the auto tier
-        # exists to prevent
-        raise ValueError(
-            f"broadcast_probe must be True, False, or 'auto'; got "
-            f"{broadcast_probe!r}"
-        )
-    if broadcast_probe != "auto":
-        return bool(broadcast_probe)
-    cap = max(1, max_probe_rows // max(1, rows_per_doc))
-    return batch.limit(cap + 1).count() <= cap
-
-
 def dedup_incremental(
     new_df: DataFrame,
     seen_digests: DataFrame,
     text_field: str = "text",
     order_by: str = "doc_id",
     digest_field: str = "digest",
-    broadcast_probe: "bool | str" = False,
-    max_probe_rows: int = 2_000_000,
+    broadcast_probe: bool = False,
     bloom=None,
 ) -> DataFrame:
     """Append-only ingestion dedup: drop rows of ``new_df`` whose text
@@ -1759,26 +1729,22 @@ def dedup_incremental(
     is ~32 bytes/doc while the corpus is ~100 KB/doc.
 
     ``broadcast_probe=True`` is the bounded-batch-vs-unbounded-history
-    shape (the streaming-ingest default): a shuffled anti-join would
-    EXCHANGE the full index every batch (~32 GB at 10^9 docs, forever),
-    because an anti-join can only broadcast its right side and the
-    index outgrows that early.  Instead the batch's distinct digests
-    (bounded by the trigger) are broadcast INTO an inner probe of the
-    index — the index crosses the plan as a SCAN ONLY, zero exchange,
-    zero sort — and the batch anti-joins against the (batch-sized) hit
-    set, also broadcast.  Same verdicts, duplicate-indifferent on both
-    sides; costs one extra evaluation of the batch's digest projection
-    (micro-batches are bounded; the history side is what must not pay
-    per-batch costs).  Pinned by the ingest plan-spy test.
-
-    ``broadcast_probe="auto"`` (the ingest default): probe mode while
-    the batch stays under ``max_probe_rows`` rows (row count
-    upper-bounds the distinct digest set; sized by a bounded
-    ``limit(cap+1).count()`` job that reads O(cap) rows however large
-    the batch), plain anti-join above it — an unbounded backfill
-    "batch" must not be broadcast into executor memory, and for that
-    regime the plain join's batch+index exchange is the correct
-    price.
+    shape: a shuffled anti-join would EXCHANGE the full index every batch
+    (~32 GB at 10^9 docs, forever), because an anti-join can only
+    broadcast its right side and the index outgrows that early. Instead
+    the batch's distinct digests (bounded by the trigger) are broadcast
+    INTO an inner probe of the index — the index crosses the plan as a
+    SCAN ONLY, zero exchange, zero sort — and the batch anti-joins against
+    the (batch-sized) hit set, also broadcast.  Same verdicts,
+    duplicate-indifferent on both sides; costs one extra evaluation of the
+    batch's digest projection (micro-batches are bounded; the history side
+    is what must not pay per-batch costs).  Pinned by the ingest plan-spy
+    test.  The flag is the caller's decision: probe mode broadcasts the
+    batch's key set, so an unbounded backfill "batch" must run plain (its
+    batch+index exchange is the correct price there).
+    :func:`~smashed_spark.streaming.ingest.ingest_dedup_batch` makes that
+    choice per micro-batch from the index's on-disk size and one bounded
+    batch count.
 
     ``bloom=`` (a :class:`~smashed_spark.functions.bloom.
     BloomFilterSketch` fit over the INDEX's digest column) removes
@@ -1815,7 +1781,7 @@ def dedup_incremental(
     # point a distinct here is a ~32 GB full-index exchange per batch
     # for nothing (the streaming-ingest path reads this index every
     # micro-batch)
-    if _resolve_probe_mode(new_df, broadcast_probe, max_probe_rows):
+    if broadcast_probe:
         probe = keyed.select(digest_field).distinct()
         if bloom is not None:
             # probe-mode bloom: filter the SLIM distinct-digest probe
@@ -1996,8 +1962,7 @@ def dedup_incremental_fuzzy(
     rows_per_band: int = 4,
     hash_fn: str = "md5",
     verify_threshold: Optional[float] = None,
-    broadcast_probe: "bool | str" = False,
-    max_probe_rows: int = 2_000_000,
+    broadcast_probe: bool = False,
 ) -> DataFrame:
     """Append-only ingestion NEAR-dedup: drop rows of ``new_df`` whose
     MinHash band keys collide with the running ``seen_bands`` index
@@ -2061,21 +2026,19 @@ def dedup_incremental_fuzzy(
     sample_mix gate chain.)  Nothing touches the historical corpus.
 
     ``broadcast_probe=True`` is the bounded-batch-vs-unbounded-history
-    shape (the streaming-ingest default): once the band index outgrows
-    the auto-broadcast limit, the indicator LEFT join would EXCHANGE
-    the full index every batch (~144 GB of band keys at 10^9 docs,
-    forever).  Instead the batch's distinct ``(band, key)`` set
-    (bounded by the trigger) is broadcast INTO an inner probe of the
-    index — the index crosses the plan as a SCAN ONLY — and the
-    indicator joins against the (batch-sized, distinct) hit-key set,
-    also broadcast, which keeps the indicator join itself a broadcast
-    join on the batch side.  Same verdicts; costs one extra evaluation
-    of the slim band projection (three upstream evaluations total).
-    ``"auto"`` (the ingest default) picks probe mode while the batch
-    stays under ``max_probe_rows / bands`` rows (each doc contributes
-    ``bands`` probe keys; sized by a bounded ``limit().count()`` job)
-    and falls back to the plain indicator join above it — an
-    unbounded backfill batch must not be broadcast.
+    shape: once the band index outgrows the auto-broadcast limit, the
+    indicator LEFT join would EXCHANGE the full index every batch (~144 GB
+    of band keys at 10^9 docs, forever).  Instead the batch's distinct
+    ``(band, key)`` set (bounded by the trigger) is broadcast INTO an
+    inner probe of the index — the index crosses the plan as a SCAN ONLY —
+    and the indicator joins against the (batch-sized, distinct) hit-key
+    set, also broadcast, which keeps the indicator join itself a broadcast
+    join on the batch side.  Same verdicts; costs one extra evaluation of
+    the slim band projection (three upstream evaluations total). As for
+    :func:`dedup_incremental`, the flag is the caller's decision (an
+    unbounded backfill batch must not be broadcast);
+    :func:`~smashed_spark.streaming.ingest.ingest_dedup_batch` routes each
+    micro-batch.
 
     Survivors keep their ``signature_field`` column so
     ``with_minhash_bands(survivors)`` extends the index without
@@ -2140,9 +2103,7 @@ def dedup_incremental_fuzzy(
     # (a dup fans the left join out, but __dochit__ (max), __min__
     # (min) and __later__ (max of a per-row predicate) are idempotent
     # under row duplication, and __nb__ was counted before the join).
-    if _resolve_probe_mode(
-        new_df, broadcast_probe, max_probe_rows, rows_per_doc=bands
-    ):
+    if broadcast_probe:
         probe = doc_bands.select("band", "key").distinct()
         index = F.broadcast(
             seen_bands.select("band", "key")

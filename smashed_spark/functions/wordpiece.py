@@ -106,6 +106,16 @@ class WordPieceTokenizer:
         self.eos_token_id = None
         self._wp_cache: Dict[str, List[Tuple[int, Tuple[int, int]]]] = {}
 
+    def __getstate__(self) -> dict:
+        # the word memo is derived state: leaving it out keeps the shipped
+        # payload small and the pickle (the tokenizer fingerprint) a
+        # function of the vocabulary and settings alone
+        return {k: v for k, v in self.__dict__.items() if k != "_wp_cache"}
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._wp_cache = {}
+
     # -- core ------------------------------------------------------------
 
     def _wordpiece(

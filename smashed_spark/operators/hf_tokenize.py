@@ -12,6 +12,7 @@ deterministic :class:`~smashed_spark.functions.wordpiece.WordPieceTokenizer`.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Any, Dict, Iterable, List, Optional
 
 import pandas as pd
@@ -50,6 +51,17 @@ def _field_type(raw_field: str, overflowing: bool):
     if overflowing and raw_field != "overflow_to_sample_mapping":
         return ArrayType(t)
     return t
+
+
+def _tokenizer_fingerprint(tokenizer) -> str:
+    """sha1 of the tokenizer's cloudpickle bytes — the serialization
+    that ships it to executors, so any state change (one vocab entry)
+    changes the mapper fingerprints and with them the segment-cache
+    key.  A pickle that is not byte-stable can only cause a cache miss,
+    never a wrong hit."""
+    from pyspark import cloudpickle
+
+    return hashlib.sha1(cloudpickle.dumps(tokenizer)).hexdigest()
 
 
 def output_fields_from_tokenizer_kwargs(kwargs: Optional[dict]) -> List[str]:
@@ -118,6 +130,7 @@ class TokenizerMapper(SparkMapper, _FnameMixin):
         self._init_fname(output_prefix, output_rename_map)
         self.to_tokenize_field = input_field
         self.tokenizer = tokenizer
+        self._tokenizer_fp = _tokenizer_fingerprint(tokenizer)
         self.tokenize_kwargs = {
             "add_special_tokens": add_special_tokens,
             "max_length": max_length,
@@ -163,7 +176,7 @@ class TokenizerMapper(SparkMapper, _FnameMixin):
                 for k, v in self.tokenize_kwargs.items()
                 if isinstance(v, (str, int, float, bool)) or v is None
             },
-            "tokenizer": type(self.tokenizer).__name__,
+            "tokenizer": self._tokenizer_fp,
             "prefix": self._output_prefix,
             "rename": self._output_rename_map,
         }
@@ -278,6 +291,7 @@ class EncodeFieldsMapper(SparkMapper):
     ) -> None:
         self.fields_to_encode = list(fields_to_encode)
         self.tokenizer = tokenizer
+        self._tokenizer_fp = _tokenizer_fingerprint(tokenizer)
         self.is_split_into_words = is_split_into_words
         self.return_offsets = fields_to_return_offset_mapping
         self.offset_prefix = offset_prefix
@@ -294,7 +308,7 @@ class EncodeFieldsMapper(SparkMapper):
             "split": self.is_split_into_words,
             "offsets": self.return_offsets,
             "offset_prefix": self.offset_prefix,
-            "tokenizer": type(self.tokenizer).__name__,
+            "tokenizer": self._tokenizer_fp,
         }
 
     def apply(self, df: DataFrame) -> DataFrame:
@@ -357,6 +371,7 @@ class DecodingMapper(SparkMapper):
         **decode_kwargs: Any,
     ) -> None:
         self.tokenizer = tokenizer
+        self._tokenizer_fp = _tokenizer_fingerprint(tokenizer)
         self.fields = list(fields)
         self.decode_batch = decode_batch
         self.skip_special_tokens = skip_special_tokens
@@ -368,7 +383,7 @@ class DecodingMapper(SparkMapper):
             "fields": self.fields,
             "batch": self.decode_batch,
             "skip_special": self.skip_special_tokens,
-            "tokenizer": type(self.tokenizer).__name__,
+            "tokenizer": self._tokenizer_fp,
         }
 
     def apply(self, df: DataFrame) -> DataFrame:

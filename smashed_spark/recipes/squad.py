@@ -22,6 +22,7 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..core.mapper import SparkMapper
 from ..core.ship import ensure_shipped
+from ..operators.hf_tokenize import _tokenizer_fingerprint
 from ..operators.masks import RangeToMaskMapper
 from ..operators.prompting import FillEncodedPromptMapper
 from ..operators.shape import SingleSequenceStriderMapper, UnpackingMapper
@@ -42,6 +43,7 @@ class EncoderWithEvidenceLocationMapper(SparkMapper):
         fields_to_encode: Optional[Sequence[str]] = None,
     ) -> None:
         self.tokenizer = tokenizer
+        self._tokenizer_fp = _tokenizer_fingerprint(tokenizer)
         self.context_field = context_field
         self.location_field = location_field
         self.extra_fields = list(fields_to_encode or [])
@@ -55,7 +57,7 @@ class EncoderWithEvidenceLocationMapper(SparkMapper):
             "context": self.context_field,
             "locations": self.location_field,
             "extra": self.extra_fields,
-            "tokenizer": type(self.tokenizer).__name__,
+            "tokenizer": self._tokenizer_fp,
         }
 
     def apply(self, df: DataFrame) -> DataFrame:

@@ -9,20 +9,23 @@ the way through (cache.py:216-229, 308-319).
 
 Spark rebuild: the checkpoint format is parquet (columnar, splittable,
 predicate-pushdown-friendly — the right sink at 100 TB, unlike the
-reference's pickle at cache.py:190-195).  The dataset fingerprint is
-derived from the *source description* (explained plan) rather than
-hashing every row (the reference pickles all rows, cache.py:100-111 —
-O(N) on the driver; a non-starter at scale).
+reference's pickle at cache.py:190-195).  The dataset fingerprint
+(``core/fingerprint.py``) is derived from the *source description*
+rather than hashing every row: two separate reads of unchanged files
+share a key (a re-run hits), while a rewritten or different file
+misses; in-memory data and Python code before the bracket never share
+one.  Building the key costs two JVM calls per file relation, reading
+the listing its read already made (no file-system call per file).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 
+from ..core.fingerprint import dataset_fingerprint, segment_fingerprint
 from ..core.mapper import SparkMapper
 
 DEFAULT_CACHE_DIR = os.path.join(
@@ -46,23 +49,6 @@ class EndCachingMapper(SparkMapper):
 
     def apply(self, df: DataFrame) -> DataFrame:  # handled by the runner
         return df
-
-
-def dataset_fingerprint(df: DataFrame) -> str:
-    """Fingerprint of a DataFrame's *plan* (not its rows).
-
-    Uses the analyzed logical plan text: deterministic for identical
-    source paths + transformations, O(1) in data size.
-    """
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return hashlib.sha1(plan.encode("utf-8")).hexdigest()
-
-
-def segment_fingerprint(mappers: List[SparkMapper]) -> str:
-    h = hashlib.sha1()
-    for m in mappers:
-        h.update(m.fingerprint.encode())
-    return h.hexdigest()
 
 
 def _cache_hit(spark, path: str) -> bool:

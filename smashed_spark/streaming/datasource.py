@@ -52,7 +52,7 @@ Delivery contract (sink)
 appends each micro-batch as ONE snapshot version under the
 ``stream_app_id``/``stream_batch_id`` exactly-once watermark — the
 contract of the foreachBatch tier (streaming/snapshot_sink.py),
-mirrored verbatim: replays skip, a foreign app's table refuses
+judged by the same gate: replays skip, a foreign app's table refuses
 unless ``takeover``.  See ``_SnapshotStreamWriter`` for the
 two-phase (stage → rename-into-prefix → manifest commit) shape and
 its append-only / importability caveats.
@@ -618,9 +618,9 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
     """Exactly-once append sink: each micro-batch commits as ONE
     snapshot version stamped with the ``stream_app_id``/
     ``stream_batch_id`` watermark — the same contract as the
-    foreachBatch tier (streaming/snapshot_sink.py), whose replay and
-    foreign-app rules this mirrors (skip ``batchId <= watermark``,
-    refuse another app's table unless ``takeover``).
+    foreachBatch tier (streaming/snapshot_sink.py), whose gate
+    (``_stream_gate``: skip ``batchId <= watermark``, refuse another
+    app's table unless ``takeover``) this commit runs.
 
     Two-phase shape: ``write`` tasks stream their Arrow batches into
     UNIQUE files under ``<root>/_staging/`` (underscore: invisible to
@@ -671,6 +671,7 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
             append_files_snapshot,
             resolve_snapshot,
         )
+        from .snapshot_sink import _stream_gate
 
         staged = [m for m in messages if m is not None]
         try:
@@ -683,21 +684,16 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
                 "a publish_snapshot (or snapshot_batch_writer, which "
                 "creates on its first batch)"
             )
-        app = head.properties.get("stream_app_id")
-        app = None if app is None else str(app)
-        last = head.properties.get("stream_batch_id")
-        last = None if last is None else int(last)
-        if app is not None and app != self._app_id and not self._takeover:
-            _discard_staged(staged)
-            raise RuntimeError(
-                f"smashed_snapshot sink: table {self._root!r} was "
-                f"last written by stream app {app!r}, not "
-                f"{self._app_id!r} — batch ids are per-checkpoint, so "
-                "honoring this batch could replay or drop data.  Pass "
-                ".option('takeover', 'true') if the old checkpoint is "
-                "decommissioned."
+        try:
+            verdict = _stream_gate(
+                head.properties, self._app_id, batchId, self._takeover,
+                f"smashed_snapshot sink: table {self._root!r}",
+                how="set .option('takeover', 'true')",
             )
-        if app == self._app_id and last is not None and batchId <= last:
+        except RuntimeError:
+            _discard_staged(staged)
+            raise
+        if verdict == "replay":
             # replayed batch after a crash between sink commit and
             # offset-log write: already in the table — drop the dupes
             _discard_staged(staged)

@@ -28,14 +28,7 @@ only the un-compacted tail is distinct'd per batch).
 
 Each micro-batch N (1) reads the full compact index EXCLUDING its own
 ``batch=N`` partition (~180 GB of slim keys at 100 TB of history vs
-a rescan of the corpus itself — the whole point; the index is SCANNED
-once per batch and never exchanged: ONE bounded sizing job on the
-raw batch routes BOTH dedup operators between ``broadcast_probe``
-mode — the bounded batch's key set broadcast into an index probe
-instead of shuffling the index into a join — and, for a batch above
-``max_probe_rows`` where the probe itself would be an unbounded
-broadcast, the plain anti/indicator join: an oversized backfill pays
-one batch+index exchange instead of OOMing the executors),
+a rescan of the corpus itself — the whole point),
 (2) scrubs the batch against it with the batch operators,
 (3) OVERWRITES its own ``batch=N`` subdirectories.  Together these
 make a retried batch a pure replay: the overwrite rewrites the same
@@ -44,6 +37,17 @@ prior index contributions means the re-run computes the same verdicts
 instead of dropping every doc as "already seen" — the standard
 exactly-once recipe for foreachBatch file sinks, pinned by
 tests/test_multimodal_streaming.py's replay test.
+
+Join routing is decided here and only here: :func:`ingest_dedup_batch`
+hands each dedup operator a plain bool ``broadcast_probe``.  An index
+of at most ``_PLAIN_INDEX_MAX_BYTES`` on disk joins PLAIN (Catalyst
+broadcasts it).  A bigger one is PROBED — the batch's key set
+broadcast into an index scan, so history is never exchanged — while
+the batch has at most ``_MAX_PROBE_ROWS`` rows (``/ bands`` when
+fuzzy), and joins PLAIN above that (a backfill pays one exchange
+rather than an unbounded broadcast).  Index size is a driver-side
+listing; batch size is one ``limit(cap + 1).count()`` on the raw
+batch, run only when some index is big.
 
 Determinism within a micro-batch comes from the batch operators
 themselves (first-wins by ``order_by``, content-hash tiebreaks, loud
@@ -185,8 +189,6 @@ def ingest_dedup_batch(
     semantic_threshold: float = 0.8,
     vector_field: str = "embedding",
     return_stats: bool = False,
-    max_probe_rows: int = 2_000_000,
-    digest_bloom=None,
     survivors_sink=None,
 ) -> "Optional[dict]":
     """Scrub ONE batch against the running indexes and commit
@@ -275,10 +277,10 @@ def ingest_dedup_batch(
     small_exact = _small_index("digests")
     small_fuzzy = _small_index("bands")
     # ONE bounded sizing job on the RAW batch resolves probe-vs-plain
-    # for BOTH operators: passing "auto" through would make the fuzzy
-    # operator's own sizing count run on the UNMATERIALIZED exact-dedup
-    # output — re-evaluating the anti-join (a second scan of the digest
-    # index) just to count rows.  The raw-batch count upper-bounds the
+    # for BOTH operators: a per-operator count would run the fuzzy
+    # stage's sizing on the UNMATERIALIZED exact-dedup output —
+    # re-evaluating the anti-join (a second scan of the digest index)
+    # just to count rows.  The raw-batch count upper-bounds the
     # fuzzy stage's input (survivors <= batch rows), so the routing is
     # conservative in the safe direction: an oversized batch exchanges
     # instead of broadcasting.  limit() keeps the job O(cap) however
@@ -287,11 +289,10 @@ def ingest_dedup_batch(
     if small_exact and (small_fuzzy or not fuzzy):
         probe_exact = probe_fuzzy = False
     else:
-        cap_fuzzy = max(1, max_probe_rows // max(1, bands))
-        sizing_cap = max(max_probe_rows, cap_fuzzy)
-        batch_rows_capped = batch.limit(sizing_cap + 1).count()
+        cap_fuzzy = max(1, _MAX_PROBE_ROWS // max(1, bands))
+        batch_rows_capped = batch.limit(_MAX_PROBE_ROWS + 1).count()
         probe_exact = (
-            batch_rows_capped <= max_probe_rows and not small_exact
+            batch_rows_capped <= _MAX_PROBE_ROWS and not small_exact
         )
         probe_fuzzy = (
             batch_rows_capped <= cap_fuzzy and not small_fuzzy
@@ -310,19 +311,11 @@ def ingest_dedup_batch(
         # bounded batch vs unbounded history: broadcast the batch's
         # digest set into an index PROBE so the history index is
         # scanned, never exchanged — the per-batch cost that must not
-        # grow with history.  Above max_probe_rows (an unbounded
+        # grow with history.  Above _MAX_PROBE_ROWS (an unbounded
         # backfill "batch") the probe would itself be an unbounded
         # broadcast, so the plain anti-join runs instead (resolved by
         # the single raw-batch sizing job above)
         broadcast_probe=probe_exact,
-        # optional Bloom prefilter (functions/bloom.py): pays most on
-        # exactly those oversized plain-join backfills — only
-        # suspected-dup rows cross the exchange.  The CALLER maintains
-        # the sketch (fit from the index, or merge() per-batch fits as
-        # batches commit — e.g. fit_bloom over this batch's survivors
-        # after return); a stale sketch re-admits duplicates, see the
-        # bloom module contract.
-        bloom=digest_bloom,
     )
     words_added = False
     if fuzzy:
@@ -470,6 +463,11 @@ _COMPACT_TARGET_BYTES = 128 * 1024 * 1024
 # plain join then auto-broadcasts the index and probe mode's extra
 # batch evaluations buy nothing (r17; see ingest_dedup_batch)
 _PLAIN_INDEX_MAX_BYTES = 4 * 1024 * 1024
+
+# batch rows above which even a big index joins PLAIN: the probe
+# broadcasts the batch's key set (``bands`` keys per doc when fuzzy),
+# and a backfill must not OOM the executors with that broadcast
+_MAX_PROBE_ROWS = 2_000_000
 
 
 def compact_ingest_state(
@@ -620,6 +618,41 @@ def compact_ingest_state(
             )
 
 
+def _ingest_batch_body(
+    who: str,
+    state_dir: str,
+    out_dir: Optional[str],
+    on_stats=None,
+    **batch_kwargs,
+):
+    """The foreachBatch body running :func:`ingest_dedup_batch` and
+    handing its stats to ``on_stats`` — for
+    :func:`streaming_ingest_dedup` and the snapshot landing zone.
+    ``return_stats`` is refused at build time: a body has nowhere to
+    return the dict."""
+    if "return_stats" in batch_kwargs:
+        raise ValueError(
+            f"{who}: pass on_stats=<callable> instead of return_stats — "
+            "foreachBatch discards the body's return value, so "
+            "return_stats would cost the extra input evaluation per "
+            "batch and deliver nothing"
+        )
+
+    def _body(batch: DataFrame, batch_id: int) -> None:
+        stats = ingest_dedup_batch(
+            batch,
+            state_dir,
+            out_dir,
+            batch_id,
+            return_stats=on_stats is not None,
+            **batch_kwargs,
+        )
+        if on_stats is not None:
+            on_stats(stats)
+
+    return _body
+
+
 def streaming_ingest_dedup(
     stream: DataFrame,
     state_dir: str,
@@ -652,29 +685,12 @@ def streaming_ingest_dedup(
     """
     from .runner import start_foreach_batch
 
-    if "return_stats" in batch_kwargs:
-        raise ValueError(
-            "streaming_ingest_dedup: pass on_stats=<callable> instead "
-            "of return_stats — foreachBatch discards the body's return "
-            "value, so return_stats would cost the extra input "
-            "evaluation per batch and deliver nothing"
-        )
-
-    def _body(batch: DataFrame, batch_id: int) -> None:
-        stats = ingest_dedup_batch(
-            batch,
-            state_dir,
-            out_dir,
-            batch_id,
-            return_stats=on_stats is not None,
-            **batch_kwargs,
-        )
-        if on_stats is not None:
-            on_stats(stats)
-
     return start_foreach_batch(
         stream,
-        _body,
+        _ingest_batch_body(
+            "streaming_ingest_dedup", state_dir, out_dir, on_stats,
+            **batch_kwargs,
+        ),
         checkpoint_dir,
         query_name,
         available_now,

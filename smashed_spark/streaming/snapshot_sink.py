@@ -24,7 +24,9 @@ effect idempotent:
   so the watermark survives any maintenance commit and any vacuum.
 * On entry the body reads the current snapshot's watermark (one
   pointer GET + one manifest GET, no chain walk) and SKIPS any
-  ``batch_id`` at or below it — a replayed batch is a no-op.
+  ``batch_id`` at or below it — a replayed batch is a no-op.  Every
+  sink, the data-source one in streaming/datasource.py too, judges
+  this in one place: ``_stream_gate``.
 * A crash BEFORE the pointer flip leaves only unreferenced debris
   (snapshot crash window 1/2); the replay appends a fresh prefix.
   A crash AFTER the flip but before the checkpoint commit is the
@@ -40,7 +42,7 @@ the new one's ids start fresh.
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence, Tuple
+from typing import Callable, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -76,6 +78,39 @@ def stream_commit_watermark(
         None if app is None else str(app),
         None if bid is None else int(bid),
     )
+
+
+def _stream_gate(
+    props: Mapping[str, object],
+    app_id: str,
+    batch_id: Optional[int],
+    takeover: bool,
+    where: str,
+    how: str = "pass takeover=True",
+) -> Optional[str]:
+    """The exactly-once gate every sink runs (module docstring): judge
+    ``batch_id`` of stream app ``app_id`` against the
+    ``stream_app_id``/``stream_batch_id`` watermark in ``props``.
+    Returns ``"replay"`` (same app, id at or below the watermark: skip
+    the commit), ``"takeover"`` (another app's record, ``takeover``
+    set) or None.  Another app's record without ``takeover`` raises:
+    batch ids restart per checkpoint.  ``where`` and ``how`` word the
+    error."""
+    app = props.get("stream_app_id")
+    app = None if app is None else str(app)
+    if app is not None and app != app_id:
+        if not takeover:
+            raise RuntimeError(
+                f"{where} was last written by stream app {app!r}, not "
+                f"{app_id!r} — batch ids are per-checkpoint, so "
+                "honoring this batch could replay or drop data.  If the "
+                f"old checkpoint is decommissioned, {how} to start fresh."
+            )
+        return "takeover"
+    last = props.get("stream_batch_id")
+    if None not in (app, last, batch_id) and batch_id <= int(last):
+        return "replay"
+    return None
 
 
 def snapshot_batch_writer(
@@ -117,20 +152,9 @@ def snapshot_batch_writer(
         except FileNotFoundError:
             empty = True
             props_now = {}
-        app = props_now.get("stream_app_id")
-        app = None if app is None else str(app)
-        last = props_now.get("stream_batch_id")
-        last = None if last is None else int(last)
-        if app is not None and app != app_id and not takeover:
-            raise RuntimeError(
-                f"snapshot_batch_writer: table {table_root!r} was last "
-                f"written by stream app {app!r}, not {app_id!r} — batch "
-                "ids are per-checkpoint, so honoring this batch could "
-                "replay or drop data.  If the old checkpoint is "
-                "decommissioned, pass takeover=True to start fresh."
-            )
-        same_app = app == app_id
-        if same_app and last is not None and batch_id <= last:
+        where = f"snapshot_batch_writer: table {table_root!r}"
+        verdict = _stream_gate(props_now, app_id, batch_id, takeover, where)
+        if verdict == "replay":
             if on_commit is not None:
                 on_commit(
                     {
@@ -224,10 +248,10 @@ def dedup_snapshot_batch_writer(
     index growth — :func:`~smashed_spark.streaming.ingest
     .ingest_dedup_batch` ``return_stats`` docs); ``on_commit``
     receives the table-side commit record.  Passing ``return_stats``
-    through ``dedup_kwargs`` is rejected loudly, exactly as
-    ``streaming_ingest_dedup`` rejects it: the body has nowhere to
-    return the dict, so it would pay the extra per-batch input
-    evaluation and deliver nothing.
+    through ``dedup_kwargs`` is rejected loudly, by the same check
+    ``streaming_ingest_dedup`` runs: the body has nowhere to return
+    the dict, so it would pay the extra per-batch input evaluation
+    and deliver nothing.
 
     ``dedup_kwargs`` forward to ``ingest_dedup_batch`` (fuzzy banding
     parameters, ``verify_threshold``, field names, semantic
@@ -237,15 +261,7 @@ def dedup_snapshot_batch_writer(
     import glob as _glob
     import os as _os
 
-    from .ingest import ingest_dedup_batch
-
-    if "return_stats" in dedup_kwargs:
-        raise ValueError(
-            "dedup_snapshot_batch_writer: pass on_stats=<callable> "
-            "instead of return_stats — the foreachBatch body discards "
-            "return values, so return_stats would cost an extra input "
-            "evaluation per batch and deliver nothing"
-        )
+    from .ingest import _ingest_batch_body
 
     append_batch = snapshot_batch_writer(
         table_root,
@@ -256,6 +272,19 @@ def dedup_snapshot_batch_writer(
         client=client,
         on_commit=on_commit,
     )
+    ingest = _ingest_batch_body(
+        "dedup_snapshot_batch_writer", state_dir, None, on_stats,
+        survivors_sink=append_batch, **dedup_kwargs,
+    )
+    marker_path = _os.path.join(state_dir, "_STATE_APP")
+
+    def _per_batch_index_dirs():
+        return [
+            d
+            for sub in ("digests", "bands", "semantic")
+            for d in _glob.glob(_os.path.join(state_dir, sub, "batch=*"))
+            if not d.endswith("batch=-1")
+        ]
 
     def _body(batch: DataFrame, batch_id: int) -> None:
         # the app-identity check must run BEFORE any dedup/index work:
@@ -272,45 +301,30 @@ def dedup_snapshot_batch_writer(
         # redelivery (index extended, table commit lost) matches the
         # marker and proceeds — recompute+overwrite of the same
         # (app, batch) data is the documented idempotence.
-        app, _last = stream_commit_watermark(table_root, client=client)
-        marker_path = _os.path.join(state_dir, "_STATE_APP")
+        table_app, _ = stream_commit_watermark(table_root, client=client)
         state_app = None
         if _os.path.isfile(marker_path):
             with open(marker_path, "r", encoding="utf-8") as fh:
                 state_app = fh.read().strip() or None
-        foreign = [
-            (src, a)
-            for src, a in (("table", app), ("state_dir", state_app))
-            if a is not None and a != app_id
-        ]
-        def _per_batch_index_dirs():
-            return [
-                d
-                for sub in ("digests", "bands", "semantic")
-                for d in _glob.glob(
-                    _os.path.join(state_dir, sub, "batch=*")
-                )
-                if not d.endswith("batch=-1")
-            ]
-
-        if not foreign and state_app is None and app is None:
+        if state_app is None and table_app is None and _per_batch_index_dirs():
             # a PRE-MARKER state_dir (legacy checkpoint, no _STATE_APP)
             # under a fresh/recreated table: nobody can vouch for the
             # batch=N dirs in it, so they are treated exactly like a
             # foreign checkpoint's — anonymous extensions would collide
             # with this checkpoint's restarted ids just the same
-            if _per_batch_index_dirs():
-                foreign = [("state_dir", "<unmarked legacy checkpoint>")]
-        if foreign:
-            if not takeover:
-                src, a = foreign[0]
-                raise RuntimeError(
-                    f"dedup_snapshot_batch_writer: {src} records stream "
-                    f"app {a!r}, not {app_id!r} (table={table_root!r}, "
-                    f"state_dir={state_dir!r}) — batch ids are "
-                    "per-checkpoint; pass takeover=True only after "
-                    "decommissioning the old checkpoint"
-                )
+            state_app = "<unmarked legacy checkpoint>"
+        # identity only (batch_id=None): a replayed id still re-runs
+        # the index work, and the wrapped writer skips its commit
+        who = "dedup_snapshot_batch_writer:"
+        verdicts = {
+            _stream_gate({"stream_app_id": a}, app_id, None, takeover,
+                         f"{who} {where}")
+            for a, where in (
+                (table_app, f"table {table_root!r}"),
+                (state_app, f"state_dir {state_dir!r}"),
+            )
+        }
+        if "takeover" in verdicts:
             stale = _per_batch_index_dirs()
             if stale:
                 raise RuntimeError(
@@ -329,17 +343,7 @@ def dedup_snapshot_batch_writer(
             _os.makedirs(state_dir, exist_ok=True)
             with open(marker_path, "w", encoding="utf-8") as fh:
                 fh.write(app_id)
-        stats = ingest_dedup_batch(
-            batch,
-            state_dir,
-            out_dir=None,
-            batch_id=batch_id,
-            survivors_sink=append_batch,
-            return_stats=on_stats is not None,
-            **dedup_kwargs,
-        )
-        if on_stats is not None:
-            on_stats(stats)
+        ingest(batch, batch_id)
 
     return _body
 

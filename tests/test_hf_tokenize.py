@@ -1,7 +1,10 @@
 """Tokenizer mappers — goldens ported from reference
 tests/test_prompting.py:85-200 (deterministic 17-token BERT vocab)."""
 
-from smashed_spark.functions.wordpiece import tiny_bert_tokenizer
+from smashed_spark.functions.wordpiece import (
+    WordPieceTokenizer,
+    tiny_bert_tokenizer,
+)
 from smashed_spark.operators.hf_tokenize import (
     DecodingMapper,
     EncodeFieldsMapper,
@@ -267,3 +270,22 @@ def test_tokenizer_word_ids_multi_piece_word(spark):
         .collect()[0]
     )
     assert out.word_ids == [None, 0, 0, 1, None]
+
+
+def test_tokenizer_fingerprint_tracks_vocab():
+    """Mapper fingerprints (the segment-cache key) hash the tokenizer's
+    state, not its class name: one changed vocab entry changes them,
+    an equal tokenizer — memo warmed or not — keeps them."""
+    vocab = ["[PAD]", "[UNK]", "[CLS]", "[SEP]", "hello", "world"]
+    changed = vocab[:-1] + ["there"]
+    makers = [
+        lambda t: TokenizerMapper(t, "a"),
+        lambda t: EncodeFieldsMapper(["a"], t),
+        lambda t: DecodingMapper(t, ["a"]),
+    ]
+    warmed = WordPieceTokenizer(vocab)
+    warmed("hello world")
+    for make in makers:
+        fp = make(WordPieceTokenizer(vocab)).fingerprint
+        assert make(WordPieceTokenizer(changed)).fingerprint != fp
+        assert make(warmed).fingerprint == fp

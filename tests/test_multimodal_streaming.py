@@ -1065,74 +1065,65 @@ def test_ingest_broadcast_probe_never_exchanges_index(spark, tmp_path):
     assert 10 not in got  # history drop survives the mode change
 
 
-def test_auto_probe_mode_routes_by_batch_size(spark, tmp_path):
-    """r9 late: ``broadcast_probe="auto"`` (now the ingest default)
-    must pick the probe plan for bounded batches and FALL BACK to the
-    plain join above ``max_probe_rows`` — an unbounded backfill batch
-    broadcast into executor memory is the OOM the auto tier exists to
-    prevent.  Probe mode is observable as the extra inner hits-join
-    (2 joins) vs plain mode's single anti/indicator join; verdicts
-    must not change with the route."""
-    from smashed_spark.functions.dedup import (
-        dedup_incremental,
-        dedup_incremental_fuzzy,
-        with_digests,
-        with_minhash_bands,
-    )
+def test_auto_probe_mode_routes_by_batch_size(spark, tmp_path, monkeypatch):
+    """ingest_dedup_batch owns the probe-vs-plain decision: a small
+    index (at most ``_PLAIN_INDEX_MAX_BYTES`` on disk) joins plain; a
+    big one is probed while the batch stays under ``_MAX_PROBE_ROWS``
+    rows (``/ bands`` on the fuzzy path) and joins plain above it, so
+    an unbounded backfill batch is never broadcast.  Each operator
+    receives a plain bool; verdicts must not change with the route."""
+    import smashed_spark.functions.dedup as dd
+    from smashed_spark.streaming import ingest
 
-    def _tree(df):
-        return (
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            .split("===== Subqueries")[0]
-            .split("\n\n")[0]
-        )
+    routes = []
 
+    def _spy(name):
+        real = getattr(dd, name)
+
+        def wrapped(*args, broadcast_probe, **kwargs):
+            assert isinstance(broadcast_probe, bool)
+            routes.append((name, broadcast_probe))
+            return real(*args, broadcast_probe=broadcast_probe, **kwargs)
+
+        monkeypatch.setattr(dd, name, wrapped)
+
+    _spy("dedup_incremental")
+    _spy("dedup_incremental_fuzzy")
+
+    state = str(tmp_path / "state")
     hist = spark.createDataFrame(
         [(0, " ".join(f"w{i}" for i in range(25)))],
         "doc_id: bigint, text: string",
-    ).withColumn("words", F.split("text", " "))
-    with_digests(hist).write.parquet(str(tmp_path / "digests"))
-    with_minhash_bands(hist).write.parquet(str(tmp_path / "bands"))
-    dig_idx = spark.read.parquet(str(tmp_path / "digests"))
-    band_idx = spark.read.parquet(str(tmp_path / "bands"))
-
+    )
+    ingest.ingest_dedup_batch(hist, state, str(tmp_path / "h"), batch_id=0)
     batch = spark.createDataFrame(
         [
-            (10, " ".join(f"w{i}" for i in range(25))),
+            (10, " ".join(f"w{i}" for i in range(25))),  # repost
             (11, " ".join(f"v{i}" for i in range(25))),
-            (12, " ".join(f"v{i}" for i in range(25))),
+            (12, " ".join(f"v{i}" for i in range(25))),  # in-batch dup
         ],
         "doc_id: bigint, text: string",
-    ).withColumn("words", F.split("text", " "))
+    )
 
-    # small batch under the cap -> probe plan (hits-join + anti-join)
-    small = dedup_incremental(
-        batch, dig_idx, broadcast_probe="auto", max_probe_rows=100
-    )
-    assert _tree(small).count("Join") == 2, _tree(small)
-    # batch over the cap -> plain single anti-join, same verdicts
-    big = dedup_incremental(
-        batch, dig_idx, broadcast_probe="auto", max_probe_rows=2
-    )
-    assert _tree(big).count("Join") == 1, _tree(big)
-    assert sorted(r.doc_id for r in small.collect()) == [11]
-    assert sorted(r.doc_id for r in big.collect()) == [11]
+    def run(plain_max_bytes, max_probe_rows):
+        monkeypatch.setattr(ingest, "_PLAIN_INDEX_MAX_BYTES", plain_max_bytes)
+        monkeypatch.setattr(ingest, "_MAX_PROBE_ROWS", max_probe_rows)
+        routes.clear()
+        out = str(tmp_path / f"out_{plain_max_bytes}_{max_probe_rows}")
+        # the same batch id every time: a replay excludes its own prior
+        # index rows, so each route judges the batch against history
+        ingest.ingest_dedup_batch(batch, state, out, batch_id=1)
+        kept = spark.read.parquet(f"{out}/batch=1").collect()
+        return (
+            [p for _, p in sorted(routes)],  # [exact, fuzzy]
+            sorted(r.doc_id for r in kept),
+        )
 
-    # fuzzy: cap counts bands keys per doc (3 docs x 4 bands = 12)
-    fsmall = dedup_incremental_fuzzy(
-        batch, band_idx, broadcast_probe="auto", max_probe_rows=100
-    )
-    fbig = dedup_incremental_fuzzy(
-        batch, band_idx, broadcast_probe="auto", max_probe_rows=8
-    )
-    # +1 everywhere vs the exact path: the survivors join-back
-    assert _tree(fsmall).count("Join") == 3, _tree(fsmall)
-    assert _tree(fbig).count("Join") == 2, _tree(fbig)
-    assert sorted(r.doc_id for r in fsmall.collect()) == sorted(
-        r.doc_id for r in fbig.collect()
-    )
+    big = -1  # every index counts as big
+    assert run(4 << 20, 100) == ([False, False], [11])  # small index
+    assert run(big, 100) == ([True, True], [11])  # 3 <= 100, 3 <= 25
+    assert run(big, 8) == ([True, False], [11])  # 3 <= 8, 3 > 8 // 4
+    assert run(big, 2) == ([False, False], [11])  # backfill: plain
 
 
 def test_ingest_dedup_batch_stats(spark, tmp_path):

@@ -744,21 +744,18 @@ auto-broadcast.  Three changes, each pinned by a plan-spy test:
    of bucketing the index on its join key, without requiring a
    metastore table: per-batch cost is one index SCAN (parquet,
    column-pruned to the key columns) + O(batch) work, instead of an
-   O(index) exchange.  Late r9: probe-vs-plain routing became
-   automatic — probe mode while the batch is under ``max_probe_rows``
-   (default 2M keys), plain join above it, so an unbounded backfill
-   "batch" pays one batch+index exchange instead of OOMing the
-   broadcast.  Route + verdict parity test-pinned.  The sizing job's
-   O(cap) claim holds only when it counts a MATERIALIZED frame:
-   ``ingest_dedup_batch`` therefore runs ONE ``limit(cap+1).count()``
-   on the RAW batch and passes resolved booleans to both operators —
-   the round's code review caught the first draft passing "auto"
-   through, whose fuzzy-stage sizing count re-evaluated the
-   unmaterialized exact-dedup output (a second scan of the digest
-   index per micro-batch).  Direct callers of the operators with
-   ``broadcast_probe="auto"`` should likewise pass a source-scanned
-   or cached frame; unrecognized strings now raise instead of
-   coercing truthy into an unbounded broadcast.  Why not `bucketBy`: Spark bucketed writes
+   O(index) exchange.  Probe-vs-plain routing lives in
+   ``ingest_dedup_batch`` alone (the operators take a plain bool):
+   plain while the index is at most ``_PLAIN_INDEX_MAX_BYTES`` on disk
+   (Catalyst broadcasts it), probe mode above that while the batch is
+   under ``_MAX_PROBE_ROWS`` (2M keys), plain again above it, so an
+   unbounded backfill "batch" pays one batch+index exchange instead
+   of OOMing the broadcast.  Route + verdict parity test-pinned.  The
+   sizing job's O(cap) claim holds only when it counts a MATERIALIZED
+   frame, so it is ONE ``limit(cap+1).count()`` on the RAW batch
+   resolving both operators — a per-operator count would re-evaluate
+   the unmaterialized exact-dedup output (a second scan of the digest
+   index per micro-batch).  Why not `bucketBy`: Spark bucketed writes
    require `saveAsTable` (a metastore), while the ingest state is
    deliberately path-based parquet (portable, overwrite-by-batch-id
    retry semantics); a deployment with a metastore can still register
